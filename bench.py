@@ -76,14 +76,14 @@ HEADLINE = [
     # weakly-supervised quality classifier, GP-EI search, global-model
     # ensemble + its holdout backtest.  Since r08 the two ensemble rows
     # amortize like the stored-index rows below: the first rep trains
-    # the G replicas and memoizes the weights per (gateway, sf_dir)
-    # (models/global_rnn.py _WEIGHTS_MEMO — bit-identical to retraining,
-    # tested), later reps measure the steady-state inference plan, so
-    # best-of-N records the amortized number a standing model serves.
-    # Since r14 ml_ar_insample amortizes the same way (_MODEL_MEMO,
-    # memo-hit == fresh-fit pinned in tests/test_ml.py) and every
-    # query's FIRST-rep time lands in BENCH_FULL.json so the cold cost
-    # stays adjudicable.
+    # the G replicas and keeps the weights per (context, sf_dir) (the
+    # "global_rnn" entry of kats_spark/reuse.py — bit-identical to
+    # retraining, tested), later reps measure the steady-state inference
+    # plan, so best-of-N records the amortized number a standing model
+    # serves.  Since r14 ml_ar_insample amortizes the same way (the
+    # "ml_ar" reuse entry, memo-hit == fresh-fit pinned in
+    # tests/test_ml.py) and every query's FIRST-rep time lands in
+    # BENCH_FULL.json so the cold cost stays adjudicable.
     "ivfpq_recall",
     "quality_classifier",
     "hpt_gpei",
@@ -221,10 +221,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     rep_counts: dict[str, int] = {}
     # r14 (VERDICT r13 item #4): record each query's FIRST-rep time too,
-    # so rows that amortize deliberately (stored indexes, global-ensemble
-    # weights, ml_ar model memo, prepared plans) expose their cold cost
-    # in BENCH_FULL.json next to the best-of-N steady state.  Additions
-    # only — the final stdout line and its `queries` dict are unchanged.
+    # so rows that amortize deliberately (stored indexes and the
+    # kats_spark.reuse entries: global-ensemble weights, the ml_ar model,
+    # prepared plans) expose their cold cost in BENCH_FULL.json next to
+    # the best-of-N steady state.  Additions only — the final stdout line
+    # and its `queries` dict are unchanged.
     first_reps: dict[str, float] = {}
     # machine-checkable box-load discipline (VERDICT r10 item #4): the
     # artifact itself records host load at start/end plus per-query rep

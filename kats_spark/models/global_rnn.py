@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kats_spark.operators.similarity import _ctx_key
+from kats_spark import reuse
 from kats_spark.tsframe import TSSchema, DEFAULT
 
 Z95 = 1.959963984540054
@@ -250,18 +250,6 @@ def _window_frame(df: DataFrame, win: int, wsize: int, s: TSSchema) -> DataFrame
     )
 
 
-# (context key, caller memo_key, every training hyperparameter) ->
-# (replicas, se_h): trained replica weights reused across repeat calls
-# of a declared query on an immutable input (VERDICT r07 item #5).  The
-# training collects are seed-deterministic in (input frame, params), so
-# a memo hit is bit-identical to retraining — asserted in tests.
-_WEIGHTS_MEMO: dict = {}
-
-
-def clear_weights_memo() -> None:
-    _WEIGHTS_MEMO.clear()
-
-
 def global_rnn_ensemble_forecast(
     df: DataFrame,
     steps: int,
@@ -299,20 +287,15 @@ def global_rnn_ensemble_forecast(
 
     win = window
     wsize = win + steps
-    mkey = None
-    if memo_key is not None:
-        mkey = (
-            _ctx_key(df.sparkSession.sparkContext),
-            memo_key,
-            steps,
-            n_replicas,
-            window,
-            hidden,
-            epochs,
-            sample_windows,
-            seed,
-        )
-    hit = _WEIGHTS_MEMO.get(mkey) if mkey is not None else None
+    # trained replica weights are kept as a "global_rnn" reuse entry
+    # keyed on (memo_key, every training hyperparameter) and reused
+    # across repeat calls of a declared query on an immutable input
+    # (VERDICT r07 item #5).  The training collects are seed-deterministic
+    # in (input frame, params), so a hit is bit-identical to retraining —
+    # asserted in tests.
+    params = (memo_key, steps, n_replicas, window, hidden, epochs,
+              sample_windows, seed)
+    hit = None if memo_key is None else reuse.get("global_rnn", params)
     if hit is not None:
         replicas, se_h = hit
     else:
@@ -346,10 +329,8 @@ def global_rnn_ensemble_forecast(
         finally:
             wins.unpersist()
         se_h = np.median(np.stack(se_all), axis=0)
-        if mkey is not None:
-            if len(_WEIGHTS_MEMO) > 64:
-                _WEIGHTS_MEMO.clear()
-            _WEIGHTS_MEMO[mkey] = (replicas, se_h)
+        if memo_key is not None:
+            reuse.put("global_rnn", params, (replicas, se_h))
     hid, hor = hidden, steps
 
     schema = (

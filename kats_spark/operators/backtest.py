@@ -161,10 +161,15 @@ def model_backtest(
     matter how many series or folds.
 
     Built-in kernels: ``arima`` (HR+CSS), ``prophet`` (ProphetLite),
-    ``naive`` (last value), ``mean``.  Returns
+    ``naive`` (last value), ``mean``; any other ``model`` raises
+    ``ValueError`` here, before the plan is built (inside the per-group
+    kernel it would be indistinguishable from a failed fit).  Returns
     (series_id, fold_id, n_train, n_test, mae, rmse, mape)."""
     import numpy as np
     import pandas as pd
+
+    if model not in ("arima", "prophet", "naive", "mean"):
+        raise ValueError(f"unknown backtest model {model!r}")
 
     def _fc(model_name, times, yv, steps, kwargs):
         if model_name == "arima":
@@ -183,9 +188,7 @@ def model_backtest(
             return m.predict(fut).fcst.to_numpy()
         if model_name == "naive":
             return np.full(steps, yv[-1])
-        if model_name == "mean":
-            return np.full(steps, yv.mean())
-        raise ValueError(f"unknown backtest model {model_name!r}")
+        return np.full(steps, yv.mean())  # "mean"
 
     ranked = df.withColumn("__rn", F.row_number().over(s.w()) - 1).withColumn(
         "__n", F.count("*").over(Window.partitionBy(s.series_id))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kats_spark import boundary
+from kats_spark import reuse
 from kats_spark.operators import dedup, similarity, text
 from kats_spark.operators.sampling import salted_cumsum
 from kats_spark.plans import eig_oracle as _EIG_ORACLE
@@ -535,7 +535,7 @@ def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the boundary the whole winnowing pipeline (char-gram rolling hash +
     # window minima) executes once per consumer (r13 plan audit: three
     # full winnow subtrees).  (doc_id, fp_hash) longs only.
-    fp = boundary.register(
+    fp = reuse.register(
         text.winnow_fingerprints(docs, k=20, w=32)
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), "fp_hash")
         .distinct()
@@ -1039,49 +1039,33 @@ WHERE e.vec_id NOT IN (SELECT id_b FROM verified WHERE cos_sim >= 0.4)
 # near-dup removal -> surviving docs with token counts)
 # --------------------------------------------------------------------------
 
-_PERSISTED: list = []
-_STAGE_MEMO: dict = {}
-
-
-def release_corpus_cache() -> None:
-    """Unpersist frames cached by ``_corpus_stages``.  Called
-    automatically when stages are REBUILT for a different (gateway,
-    sf_dir) key (so the session holds at most one cached stage set);
-    callers that want a fully clean session can invoke it directly after
-    collecting their result."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:  # session already gone — nothing to release
-            pass
-
-
 def _corpus_stages(spark: SparkSession, sf_dir: str):
     """Shared corpus-prep stage frames: (docs, kept, exact, final).
 
-    The constructed frames are MEMOIZED per (py4j gateway, sf_dir): the
-    stage plan is ~1 s of driver-side py4j Column construction plus two
-    persist-forced Catalyst analyses, a fixed cost that real pipelines
-    pay once (the prepared-statement pattern) but that repeated query
-    calls in one session were paying per call — the source of
-    corpus_prep's round-over-round bench creep on unchanged plans.
-    DataFrame plans are immutable, so reuse is safe; the persist
-    boundaries are re-registered on every hit because an external
+    The constructed frames are kept per (SparkContext, sf_dir) as the
+    ``"corpus_stages"`` reuse entry: the stage plan is ~1 s of
+    driver-side py4j Column construction plus two persist-forced
+    Catalyst analyses, a fixed cost that real pipelines pay once (the
+    prepared-statement pattern) but that repeated query calls in one
+    session were paying per call — the source of corpus_prep's
+    round-over-round bench creep on unchanged plans.  DataFrame plans
+    are immutable, so reuse is safe; the entry holds its persist
+    boundaries, which every hit re-registers: an external
     ``spark.catalog.clearCache()`` (the bench harness does this between
     reps) silently drops them, and without the boundary the AllPairs
     self-join re-executes the whole scoring scan per side."""
-    sc = spark.sparkContext
-    key = ((sc.applicationId, sc.startTime), sf_dir)
-    hit = _STAGE_MEMO.get(key)
-    if hit is not None:
-        frames, out = hit
-        for f in frames:  # no-op if still registered; re-registers after
-            f.persist()   # an external clearCache
+    out = reuse.get("corpus_stages", sf_dir)
+    if out is not None:
         return out
-    # new key: drop stale memo entries + release their cached frames so
-    # at most one stage set stays materialized per process
-    _STAGE_MEMO.clear()
-    release_corpus_cache()
+    # new key: release the previous stage set first, so at most one
+    # stage set stays materialized per process
+    reuse.drop("corpus_stages")
+    with reuse.capture() as held:
+        out = _build_corpus_stages(spark, sf_dir)
+    return reuse.put("corpus_stages", sf_dir, out, held)
+
+
+def _build_corpus_stages(spark: SparkSession, sf_dir: str):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # persist the scored projection BEFORE filtering: predicate pushdown
     # substitutes computed columns into the filter, duplicating the
@@ -1090,12 +1074,11 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     # cache is a materialization boundary — scores evaluate once, the
     # filter reads columns.  (At 100 TB the same boundary is an
     # intermediate parquet write.)
-    scored = (
+    scored = reuse.register(
         text.score_and_lang(docs, keep_token_count=True)
         .select("doc_id", "text", "quality_score", "lang_pred", "n_tokens")
         .persist()
     )
-    _PERSISTED.append(scored)
     kept = scored.filter(
         (F.col("lang_pred") == "en") & (F.col("quality_score") >= 0.6)
     ).select("doc_id", "text", "quality_score", "n_tokens")
@@ -1109,13 +1092,8 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     # persisting exact A/B-measured vs recompute-from-scored (r13): the
     # cache write pays for itself across the three consumers (8.6 s vs
     # 9.3 s for prep+build+funnel at sf0.1)
-    exact = dedup.exact_dedup(kept).persist()
-    _PERSISTED.append(exact)
-    inner: list = []
-    pairs = dedup.jaccard_allpairs(
-        exact, shingle_n=3, threshold=0.5, persist_registry=inner
-    )
-    _PERSISTED.extend(inner)
+    exact = reuse.register(dedup.exact_dedup(kept).persist())
+    pairs = dedup.jaccard_allpairs(exact, shingle_n=3, threshold=0.5)
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     # final is NOT persisted: its upstream boundaries (scored, exact, the
     # AllPairs inner frames) already cache everything expensive, so
@@ -1128,9 +1106,7 @@ def _corpus_stages(spark: SparkSession, sf_dir: str):
     final = exact.join(dropped, "doc_id", "left_anti").select(
         "doc_id", "quality_score", "n_tokens"
     )
-    out = (docs, kept, exact, final)
-    _STAGE_MEMO[key] = ([scored, exact, *inner], out)
-    return out
+    return docs, kept, exact, final
 
 
 def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:

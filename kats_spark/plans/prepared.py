@@ -5,8 +5,9 @@ costs real driver time — py4j Column construction plus Spark's EAGER
 Catalyst analysis at every ``select``/``withColumns`` (a 36-lag ACF
 detector's tree analyzes in ~1.5 s — measured r07).  A production
 engine parses and plans a query shape ONCE (prepared statements); this
-memo gives the declared queries the same contract: per (py4j gateway,
-sf_dir, function), the constructed DataFrame is reused.
+memo gives the declared queries the same contract: per (SparkContext,
+sf_dir, function), the constructed DataFrame is kept as a ``"prepared"``
+entry of ``kats_spark.reuse``.
 
 STRICT eligibility — a function may be decorated ONLY if its body:
 - runs NO driver-side actions (no collect/count/toPandas — iterative
@@ -26,12 +27,12 @@ STRICT eligibility — a function may be decorated ONLY if its body:
   a lazily-checkpointed frame would silently carry MATERIALIZED data
   across an external ``clearCache()`` and turn a repeat measurement
   into a cache read.  Plain ``persist()`` boundaries ARE allowed when
-  the operator registers them via ``kats_spark.boundary.register``:
+  the operator registers them via ``kats_spark.reuse.register``:
   the memo re-registers them (``persist()`` — registration only, the
   dropped blocks recompute fresh) on every hit, so an external
   ``clearCache()`` neither silently removes the boundary nor leaks
   materialized data into the next measurement.  (Queries with their
-  own cached stage sets use a re-registering memo instead — see
+  own cached stage sets keep them as a separate reuse entry — see
   pipeline_queries._corpus_stages.)
 - is deterministic in (spark, sf_dir).
 
@@ -47,16 +48,7 @@ from __future__ import annotations
 
 import functools
 
-_MEMO: dict = {}
-
-
-def _gateway_key(spark) -> tuple:
-    """Stable context identity: (applicationId, startTime) is unique per
-    live SparkContext, unlike ``id(gateway)`` which CPython can recycle
-    after GC — a recycled address could replay DataFrames bound to a
-    stopped context (same fix as operators/similarity._ctx_key)."""
-    sc = spark.sparkContext
-    return (sc.applicationId, sc.startTime)
+from kats_spark import reuse
 
 
 def prepared(*, recache=()):
@@ -69,30 +61,17 @@ def prepared(*, recache=()):
     def deco(fn):
         @functools.wraps(fn)
         def wrapper(spark, sf_dir):
-            from kats_spark import boundary
-
-            key = (_gateway_key(spark), sf_dir, fn.__module__, fn.__qualname__)
-            hit = _MEMO.get(key)
-            if hit is not None:
-                out, bounds = hit
+            params = (sf_dir, fn.__module__, fn.__qualname__)
+            out = reuse.get("prepared", params)
+            if out is not None:
                 for provider in recache:
                     provider(spark, sf_dir)
-                for b in bounds:  # re-register dropped persist boundaries
-                    b.persist()
                 return out
-            bounds: list = []
-            with boundary.capture(bounds):
+            with reuse.capture() as held:
                 out = fn(spark, sf_dir)
-            if len(_MEMO) > 1024:  # dead-gateway hygiene; plans are tiny
-                _MEMO.clear()
-            _MEMO[key] = (out, bounds)
-            return out
+            return reuse.put("prepared", params, out, held)
 
         wrapper.__wrapped_query__ = fn  # tests compare fresh vs memoized
         return wrapper
 
     return deco
-
-
-def clear() -> None:
-    _MEMO.clear()

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kats_spark import reuse
 from kats_spark.models import fcst as fcst_mod
 from kats_spark.plans.prepared import prepared
 from kats_spark.operators import (
@@ -2003,9 +2004,6 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVFPQ_COARSE_MEMO: dict = {}
-
-
 def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed index audit (IVFADC, Jégou 2011 §IV; VERDICT r03
     item #3): coarse cells + residual PQ codes + probed ADC scan + exact
@@ -2025,21 +2023,17 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.operators import ivf, pq
     from kats_spark.operators.ivf import _rnd6, _sq_dist
 
-    # coarse-plan memo (the r13 embed_neardup _INDEX_MEMO pattern): the
+    # coarse-plan memo (the r13 embed_neardup index-memo pattern): the
     # (emb, indexed, centers) LOGICAL PLANS are deterministic in
-    # (gateway, sf_dir) and cost ~0.5 s of py4j/Catalyst work per call;
-    # memo-hit re-registers the persist/cache boundaries (registration
-    # only — an external clearCache leaves dropped blocks to recompute
-    # fresh, so no data survives into the next measurement).  The PQ
-    # training collects, the encode pass and the searches below run
-    # UNmemoized every call — that is the real work this audit measures.
-    key = ((spark.sparkContext.applicationId, spark.sparkContext.startTime), sf_dir)
-    hit = _IVFPQ_COARSE_MEMO.get(key)
-    if hit is not None:
-        emb, indexed, centers_df = hit
-        indexed.persist()
-        centers_df.persist()
-    else:
+    # (context, sf_dir) and cost ~0.5 s of py4j/Catalyst work per call;
+    # the "ivfpq_coarse" reuse entry holds the persist/cache boundaries,
+    # and a hit re-registers them (registration only — an external
+    # clearCache leaves dropped blocks to recompute fresh, so no data
+    # survives into the next measurement).  The PQ training collects,
+    # the encode pass and the searches below run UNmemoized every call —
+    # that is the real work this audit measures.
+    coarse = reuse.get("ivfpq_coarse", sf_dir)
+    if coarse is None:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
         )
@@ -2048,7 +2042,10 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # encode via the resid boundary) AND the plain-IVF baseline scan —
         # without it the coarse argmin pipeline runs once per consumer
         indexed = indexed.persist()
-        _IVFPQ_COARSE_MEMO[key] = (emb, indexed, centers_df)
+        coarse = reuse.put(
+            "ivfpq_coarse", sf_dir, (emb, indexed, centers_df), (indexed, centers_df)
+        )
+    emb, indexed, centers_df = coarse
     # the bounded query-vector collect is independent of the PQ build —
     # overlap the two driver jobs (guide §2.6)
     with ThreadPoolExecutor(max_workers=1) as pool:
@@ -4467,7 +4464,6 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py."""
     import pandas as pd
 
-    from kats_spark import boundary
     from kats_spark.operators import dedup
     from kats_spark.operators.skew import _UNKNOWN_STATS, plan_size_bytes
 
@@ -4520,7 +4516,7 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = docs.mapInPandas(fused_kernel, "media_id bigint, phash bigint")
     # hash frame feeds both sides of the band self-join (see
     # multimodal.phash_neardup_pairs, whose tail this reuses)
-    fp = boundary.register(fp.persist())
+    fp = reuse.register(fp.persist())
     out = dedup.simhash_pairs(fp, max_hamming=6, id_col="media_id", fp_col="phash")
     return out.select(
         F.col("id_a").cast("bigint").alias("id_a"),

@@ -1,18 +1,13 @@
-"""Canonical parity fixtures — pure-numpy deterministic series shared by
-``tools/make_reference_goldens.py`` (which runs statsmodels / prophet on
-them OUTSIDE this container) and ``tests/test_reference_goldens.py``
-(which replays our estimators on the identical series and compares
-against the committed goldens).
+"""Canonical parity fixtures — pure-numpy deterministic series with a
+fixed seed, shared by tests that replay our estimators on an identical
+series (``airline_like`` drives the SARIMA stability regression test in
+``tests/test_sarima_bvar.py``).
 
 Mirrors the reference's golden strategy
-(kats/tests/models/test_models_dummy_data.py pins library outputs;
-kats/tests/models/test_arima_model.py:26 compares at rtol 0.005): the
-fixture DEFINITION lives in code, the library OUTPUT lives in a
-versioned JSON with provenance, and the test skips when the JSON has
-not been generated yet.
-
-Every generator takes only a seed and returns (times, y) with times as
-numpy datetime64[ns]; nothing here imports Spark.
+(kats/tests/models/test_models_dummy_data.py pins library outputs): the
+fixture DEFINITION lives in code.  Every generator takes only a seed and
+returns (times, y) with times as numpy datetime64[ns]; nothing here
+imports Spark.
 """
 
 from __future__ import annotations
@@ -20,20 +15,6 @@ from __future__ import annotations
 import numpy as np
 
 START = np.datetime64("2022-01-03T00:00:00", "ns")
-
-
-def arma_2_1(n: int = 300, seed: int = 42):
-    """Seeded ARMA(2,1): phi=(0.6, -0.28), theta=0.4, mu=10 — the ARIMA
-    MLE parity case (fit as ARIMA(2,0,1))."""
-    rng = np.random.default_rng(seed)
-    burn = 200
-    e = rng.standard_normal(n + burn)
-    x = np.zeros(n + burn)
-    for t in range(2, n + burn):
-        x[t] = 0.6 * x[t - 1] - 0.28 * x[t - 2] + e[t] + 0.4 * e[t - 1]
-    y = 10.0 + x[burn:]
-    times = START + np.arange(n) * np.timedelta64(86400, "s").astype("timedelta64[ns]")
-    return times, y
 
 
 def airline_like(n: int = 144, seed: int = 7):
@@ -49,24 +30,3 @@ def airline_like(n: int = 144, seed: int = 7):
     y = trend * season + rng.normal(0, 3.0, n)
     times = START + (i * 30 * 86400 * 10**9).astype("timedelta64[ns]")
     return times, y
-
-
-def prophet_daily(n: int = 400, seed: int = 3):
-    """Daily series with piecewise-linear trend (one changepoint) +
-    weekly seasonality + noise — the Prophet parity case."""
-    rng = np.random.default_rng(seed)
-    i = np.arange(n, dtype=float)
-    trend = 20.0 + 0.08 * i
-    trend = np.where(i >= 250, trend + 0.12 * (i - 250), trend)
-    dow = i % 7
-    weekly = 2.0 * np.sin(2 * np.pi * dow / 7.0) + 1.0 * np.cos(2 * np.pi * dow / 7.0)
-    y = trend + weekly + rng.normal(0, 0.5, n)
-    times = START + (i * 86400 * 10**9).astype("timedelta64[ns]")
-    return times, y
-
-
-FIXTURES = {
-    "arma_2_1": arma_2_1,
-    "airline_like": airline_like,
-    "prophet_daily": prophet_daily,
-}

@@ -709,26 +709,27 @@ def test_all_pairs_topk_sharded_equals_unsharded(spark):
     # for the driver-side collect + broadcast) is bit-identical to a
     # fresh build, and the second call actually HITS the memo (no new
     # broadcast handles).
-    from kats_spark.operators import similarity as sim
+    from kats_spark import reuse
 
-    sim.clear_index_memo()
+    reuse.drop("allpairs_index")
     first = (
         all_pairs_topk(df, k=5, memo_key="test-allpairs")
         .toPandas()
         .sort_values(["id_a", "rk"])
         .reset_index(drop=True)
     )
-    handles_after_first = dict(sim._INDEX_MEMO)
+    handles_after_first = reuse.stats("allpairs_index")
     hitpath = (
         all_pairs_topk(df, k=5, memo_key="test-allpairs")
         .toPandas()
         .sort_values(["id_a", "rk"])
         .reset_index(drop=True)
     )
-    assert dict(sim._INDEX_MEMO) == handles_after_first  # same live handles
+    assert reuse.stats("allpairs_index") == handles_after_first._replace(
+        hits=handles_after_first.hits + 1)  # same live handles
     pd.testing.assert_frame_equal(one, first, check_dtype=False)
     pd.testing.assert_frame_equal(one, hitpath, check_dtype=False)
-    sim.clear_index_memo()
+    reuse.drop("allpairs_index")
 
 
 def test_minhash_bucket_cap_overflow_join_equals_in_row(spark):
@@ -939,6 +940,28 @@ def test_model_backtest_arima_beats_naive(spark):
     nv = bt.model_backtest(df, spec, model="naive").toPandas()
     assert len(ar) == 9 and len(nv) == 9
     assert ar.mae.mean() < nv.mae.mean()
+
+
+def test_model_backtest_unknown_model_raises(spark):
+    """An unknown ``model`` raises on the driver: inside the per-group
+    kernel, the catch for failed fits would turn it into an empty frame.
+    A built-in kernel still yields one row per (series, fold)."""
+    import pytest
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "series_id": [f"s{k}" for k in range(2) for _ in range(60)],
+                "time": list(pd.date_range("2024-01-01", periods=60, freq="h")) * 2,
+                "value": [float(i % 7) + k for k in range(2) for i in range(60)],
+            }
+        )
+    )
+    spec = backtest.fold_spec(spark, n_folds=3, train_frac=0.6, test_frac=0.1)
+    with pytest.raises(ValueError, match="holt"):
+        backtest.model_backtest(df, spec, model="holt")
+    nv = backtest.model_backtest(df, spec, model="naive").toPandas()
+    assert nv.groupby("series_id").size().to_dict() == {"s0": 3, "s1": 3}
 
 
 def test_simhash_pairs_band_join_equals_bruteforce(spark):

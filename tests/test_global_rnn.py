@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kats_spark import reuse
 from kats_spark.models.global_rnn import GRULite, global_rnn_forecast
 
 
@@ -351,13 +352,14 @@ def test_global_rnn_ensemble_weights_memo_bit_identical(spark):
             .reset_index(drop=True)[cols]
         )
 
-    gr.clear_weights_memo()
+    reuse.drop("global_rnn")
     fresh = run()
     first = run(memo_key="t-ens")
-    memo_snapshot = dict(gr._WEIGHTS_MEMO)
-    assert len(memo_snapshot) == 1
+    memo_snapshot = reuse.stats("global_rnn")
+    assert memo_snapshot.live == 1
     hit = run(memo_key="t-ens")
-    assert dict(gr._WEIGHTS_MEMO) == memo_snapshot  # no retrain on hit
+    assert reuse.stats("global_rnn") == memo_snapshot._replace(
+        hits=memo_snapshot.hits + 1)  # no retrain on hit
     pd.testing.assert_frame_equal(fresh, first)
     pd.testing.assert_frame_equal(fresh, hit)
-    gr.clear_weights_memo()
+    reuse.drop("global_rnn")

@@ -4,6 +4,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from kats_spark import reuse
 from kats_spark.models import ml_ar
 from kats_spark.operators import ivf, simulator, tsfeatures
 from kats_spark.operators.similarity import topk_vs_query
@@ -601,10 +602,10 @@ def test_ml_ar_model_memo_hit_equals_fresh(spark):
         spark, n_series=2, n_points=200, noise_std=0.5,
         seasonal_period=24, seasonal_magnitude=2.0, seed=83,
     )
-    ml_ar._MODEL_MEMO.clear()
+    reuse.drop("ml_ar")
     fresh = sorted(map(tuple, ml_ar.fit_predict_insample(
         df, max_iter=5, memo_key=("t",)).collect()))
-    assert ml_ar._MODEL_MEMO  # first call trained and stored
+    assert reuse.stats("ml_ar").live  # first call trained and stored
     hit = sorted(map(tuple, ml_ar.fit_predict_insample(
         df, max_iter=5, memo_key=("t",)).collect()))
     assert hit == fresh
@@ -612,7 +613,7 @@ def test_ml_ar_model_memo_hit_equals_fresh(spark):
     other = sorted(map(tuple, ml_ar.fit_predict_insample(
         df, max_iter=5, memo_key=("u",)).collect()))
     assert other == fresh
-    ml_ar._MODEL_MEMO.clear()
+    reuse.drop("ml_ar")
 
 
 def test_quality_classifier_memo_hit_equals_fresh(spark):
@@ -632,11 +633,11 @@ def test_quality_classifier_memo_hit_equals_fresh(spark):
             F.lit(" common filler words appear here often enough"),
         ).alias("text"),
     )
-    qc._MODEL_MEMO.clear()
+    reuse.drop("quality_classifier")
     fresh = sorted(map(tuple, qc.quality_classifier_scores(
         df, max_iter=5, memo_key=("t",)).collect()))
-    assert qc._MODEL_MEMO  # trained and stored
+    assert reuse.stats("quality_classifier").live  # trained and stored
     hit = sorted(map(tuple, qc.quality_classifier_scores(
         df, max_iter=5, memo_key=("t",)).collect()))
     assert hit == fresh
-    qc._MODEL_MEMO.clear()
+    reuse.drop("quality_classifier")

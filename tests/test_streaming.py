@@ -462,96 +462,6 @@ def test_bocpd_poisson_streaming_equals_batch(spark):
         shutil.rmtree(tmpdir, ignore_errors=True)
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas' driver worker needs the protobuf "
-    "python package (absent in this container); the applyInPandasWithState "
-    "harness above covers the same contract end-to-end. r12 verification "
-    "of the blocker (VERDICT r11 item #7): pyspark 4.1.2's "
-    "sql/streaming/StateMessage_pb2.py hard-imports google.protobuf at "
-    "module load, pyspark ships no vendored copy "
-    "(find_spec('google.protobuf') -> ModuleNotFoundError), and package "
-    "installs are out of contract — a genuine container-level blocker, "
-    "not an un-run test",
-)
-def test_tws_streaming_equals_batch(spark):
-    """transformWithStateInPandas harness (RocksDB store, native TTL
-    surface) produces the same scores as the batch reference."""
-    import numpy as np
-
-    from kats_spark.streaming import tws_harness as tws
-
-    tmpdir = tempfile.mkdtemp()
-    out_table = "zscore_tws_out"
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", tws.ROCKSDB_PROVIDER
-        )
-        rng = np.random.RandomState(5)
-        n = 80
-        pdf = pd.DataFrame(
-            {
-                "series_id": ["a"] * n + ["b"] * n,
-                "time": list(pd.date_range("2024-01-01", periods=n, freq="h")) * 2,
-                "value": rng.randn(2 * n),
-            }
-        )
-        pdf.loc[60, "value"] += 12.0
-        static = spark.createDataFrame(pdf)
-        chunk_dir = os.path.join(tmpdir, "in")
-        os.makedirs(chunk_dir)
-        pdf_us = pdf.assign(time=pdf.time.astype("datetime64[us]"))
-        pdf_us.iloc[: n // 2].to_parquet(os.path.join(chunk_dir, "c0.parquet"))
-        pdf_us.iloc[n // 2 :].to_parquet(os.path.join(chunk_dir, "c1.parquet"))
-
-        stream = (
-            spark.readStream.schema("series_id string, time timestamp, value double")
-            .parquet(chunk_dir)
-        )
-        q = (
-            tws.zscore_stream_tws(stream, z_threshold=3.0)
-            .writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-        got = (
-            spark.table(out_table)
-            .toPandas()
-            .sort_values(["series_id", "time"])
-            .reset_index(drop=True)
-        )
-        exp = (
-            dh.zscore_batch(static, z_threshold=3.0)
-            .toPandas()
-            .sort_values(["series_id", "time"])
-            .reset_index(drop=True)
-        )
-        assert len(got) == len(exp) == 2 * n
-        pd.testing.assert_frame_equal(got, exp, check_dtype=False, rtol=1e-12)
-        assert (got[got.stat_sig == 1].value > 5).any()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        shutil.rmtree(tmpdir, ignore_errors=True)
-
-
 def test_session_window_streaming_equals_batch(spark):
     """Native session_window sessionization under Structured Streaming
     (update-less complete mode) equals the batch session_window agg on

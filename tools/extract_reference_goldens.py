@@ -3,10 +3,10 @@ committed test data (kats/tests/models/test_models_dummy_data.py — a
 27k-line module of pd.DataFrame literals pinning statsmodels / fbprophet
 forecasts on the packaged public datasets).
 
-This replaces tools/make_reference_goldens.py when the libraries are not
-installable: the reference already SHIPS the library outputs, so parity
-against them is parity against statsmodels/prophet at the versions the
-reference tested (SM_12 = statsmodels >= 0.12 variants).  Only numeric
+No library needs to be installed: the reference already SHIPS the
+library outputs, so parity against them is parity against
+statsmodels/prophet at the versions the reference tested (SM_12 =
+statsmodels >= 0.12 variants).  Only numeric
 DATA is read from the reference — no code.
 
 Outputs:
