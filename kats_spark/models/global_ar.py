@@ -15,7 +15,7 @@ them per series — has an exact distributed closed form for an AR model:
 This is the degenerate-but-honest "global model": more data per
 parameter, no per-series fit cost, new/short series get forecasts from
 step one (the globalmodel pitch) — and unlike the RNN it hash-matches a
-DuckDB oracle.  The torch path stays gated in models/external.py.
+DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -12,8 +12,7 @@ regularizer we mirror with the regressor prior scale).
 
 Forecasting is recursive over the horizon (each step's prediction feeds
 the next step's lag vector), matching NeuralProphet's one-step decoder
-unrolled.  The torch-backed wrapper in models/external.py stays gated
-for numerical parity with the real package.
+unrolled.
 """
 
 from __future__ import annotations

@@ -544,11 +544,9 @@ def prophet_forecast(
     )
 
 
-#: Minimum surviving history rows for the pre-fit outlier filter to
-#: actually drop rows, shared by BOTH detector backends (fbprophet in
-#: models/external.py and the lite fallback below) so they agree on
-#: short histories.  The reference's _remove_outliers
-#: (kats/detectors/prophet_detector.py) has no gate at all; we keep a
+#: Minimum surviving history rows for the pre-fit outlier filter of
+#: ``prophet_detector_scores`` to actually drop rows.  The reference's
+#: _remove_outliers (kats/detectors/prophet_detector.py) has no gate at all; we keep a
 #: floor because refitting a trend+seasonality model on <10 points is
 #: degenerate — a documented, deliberate divergence.
 REMOVE_OUTLIERS_MIN_KEEP = 10

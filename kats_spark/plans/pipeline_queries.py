@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from kats_spark import reuse
 from kats_spark.operators import dedup, similarity, text
 from kats_spark.operators.sampling import salted_cumsum
+from kats_spark.operators.skew import spread
 from kats_spark.plans import eig_oracle as _EIG_ORACLE
 from kats_spark.plans.prepared import prepared
 
@@ -810,22 +811,16 @@ def q_bitext_mine_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bitext_mine_ann``: the stored search replays the same rounded
     probe / margin lattice.  Reuse gate keys on the source parquet's
     content fingerprint."""
-    import os
-
     from kats_spark.sources.ann_store import (
         bitext_mine_stored,
         mark_stored,
         save_bitext_target,
         source_fingerprint,
         stored_is_current,
+        stored_location,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        "spark-warehouse",
-        f"bitext_target_{sf_name}",
-    )
+    _, path = stored_location("bitext_target", sf_dir)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding"), "label"
     )
@@ -2294,22 +2289,15 @@ def q_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources.py).  Same output and oracle as
     incremental_neardup; this is the amortized daily-ingest path the
     in-line variant's one-shot plan promises."""
-    import os
-
     from kats_spark.sources.ann_store import (
         incremental_neardup_stored,
         save_band_index,
+        stored_location,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    table = f"band_index_{sf_name}"
+    table, path = stored_location("band_index", sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if not spark.catalog.tableExists(table):
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            "spark-warehouse",
-            table,
-        )
         # register-or-rebuild (r14): the session catalog is in-memory, so
         # a fresh session forgets the table; when the on-disk index is
         # current for this source (content fingerprint + build params),
@@ -2434,22 +2422,15 @@ def q_incremental_simhash_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch joins it with no corpus-side exchange — completing the
     stored-index trio (MinHash bands / span grams / simhash chunks).
     Same output and oracle as incremental_simhash."""
-    import os
-
     from kats_spark.sources.ann_store import (
         incremental_simhash_stored,
         save_simhash_index,
+        stored_location,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    table = f"simhash_index_{sf_name}"
+    table, path = stored_location("simhash_index", sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if not spark.catalog.tableExists(table):
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            "spark-warehouse",
-            table,
-        )
         # register-or-rebuild (r14) — see q_incremental_neardup_stored
         _ensure_stored_index(
             spark,
@@ -2697,22 +2678,15 @@ def q_incremental_excise_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     it with NO corpus-side exchange or recompute (asserted in
     tests/test_sources.py).  Same output and oracle as
     incremental_excise; this is the amortized daily-ingest path."""
-    import os
-
     from kats_spark.sources.ann_store import (
         incremental_excise_stored,
         save_gram_index,
+        stored_location,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    table = f"gram_index_{sf_name}"
+    table, path = stored_location("gram_index", sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if not spark.catalog.tableExists(table):
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            "spark-warehouse",
-            table,
-        )
         # register-or-rebuild (r14) — see q_incremental_neardup_stored
         _ensure_stored_index(
             spark,
@@ -3213,11 +3187,8 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature hashing replays in DuckDB)."""
     from kats_spark.operators.dsir import dsir_weights
 
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "lang", "text")
-        .repartition(par)  # one sub-128MB bench split; see q_source_overlap
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang", "text")
     )
     # target ⊆ raw: one fused tokenize pass (dsir.dsir_weights r14)
     out = dsir_weights(
@@ -3410,11 +3381,8 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — value-hashes against the DuckDB replay."""
     from kats_spark.operators.dsir import dsir_resample
 
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "lang", "text")
-        .repartition(par)  # one sub-128MB bench split; see q_source_overlap
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang", "text")
     )
     # target ⊆ raw: one fused tokenize pass (dsir.dsir_weights r14)
     out = dsir_resample(
@@ -3458,22 +3426,16 @@ def q_dsir_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce default in DuckDB).  The reuse gate keys on a CONTENT
     fingerprint of the source parquet, not path existence — a
     regenerated dataset refreshes the stored table (ADVICE r09)."""
-    import os
-
     from kats_spark.sources.ann_store import (
         dsir_weights_stored,
         mark_stored,
         save_dsir_ratio,
         source_fingerprint,
         stored_is_current,
+        stored_location,
     )
 
-    sf_name = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        "spark-warehouse",
-        f"dsir_ratio_{sf_name}",
-    )
+    _, path = stored_location("dsir_ratio", sf_dir)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fp = source_fingerprint(f"{sf_dir}/documents.parquet")
     if not stored_is_current(path, fp):
@@ -3595,11 +3557,8 @@ def q_mixture_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dsir.py."""
     from kats_spark.operators.dsir import mixture_fit
 
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "lang", "source", "text")
-        .repartition(par)  # one sub-128MB bench split; see q_source_overlap
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang", "source", "text")
     )
     # target ⊆ raw: one tokenize pass + ONE aggregate/collect
     # (dsir.mixture_fit r14)
@@ -3621,15 +3580,11 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources| rows; exact oracle (portable affine hash family)."""
     from kats_spark.operators.dsir import source_overlap
 
-    # narrow (source, text) projection repartitioned to the core count:
-    # the bench parquet is one sub-128MB split, and the 64 affine mins
-    # per shingle would otherwise run on ONE task (the multimodal-kernel
-    # precedent); a real corpus has plenty of input splits already
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "source", "text")
-        .repartition(par)
+    # narrow (source, text) projection spread to the core count when the
+    # scan has fewer splits than cores (one sub-128MB parquet): the 64
+    # affine mins per shingle would otherwise run on ONE task
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source", "text")
     )
     out = source_overlap(docs, num_hashes=64, shingle_n=3, seed=1)
     return out.select(

@@ -31,17 +31,12 @@ STRICT eligibility — a function may be decorated ONLY if its body:
   the memo re-registers them (``persist()`` — registration only, the
   dropped blocks recompute fresh) on every hit, so an external
   ``clearCache()`` neither silently removes the boundary nor leaks
-  materialized data into the next measurement.  (Queries with their
-  own cached stage sets keep them as a separate reuse entry — see
-  pipeline_queries._corpus_stages.)
+  materialized data into the next measurement.  The shared cached
+  series (queries.hourly_series / daily_series) register the same way,
+  so after a hit, reuse of them within and across queries is identical
+  to a fresh build.  (Queries with their own cached stage sets keep
+  them as a separate reuse entry — see pipeline_queries._corpus_stages.)
 - is deterministic in (spark, sf_dir).
-
-``recache`` lists shared cached-frame providers (hourly_series /
-daily_series) the query's plan subtree references: calling the provider
-re-registers its ``.cache()`` with the cache manager (keyed on the
-analyzed plan, so the memoized plan's matching subtree hits it), which
-keeps intra-plan and cross-query reuse identical to a fresh build after
-an external ``clearCache()``.
 """
 
 from __future__ import annotations
@@ -51,12 +46,8 @@ import functools
 from kats_spark import reuse
 
 
-def prepared(*, recache=()):
-    """Decorator: memoize a pure-plan (spark, sf_dir) -> DataFrame query.
-
-    ``recache``: callables (spark, sf_dir) -> DataFrame whose internal
-    ``.cache()`` must be re-registered on every hit (see module doc).
-    """
+def prepared():
+    """Decorator: memoize a pure-plan (spark, sf_dir) -> DataFrame query."""
 
     def deco(fn):
         @functools.wraps(fn)
@@ -64,8 +55,6 @@ def prepared(*, recache=()):
             params = (sf_dir, fn.__module__, fn.__qualname__)
             out = reuse.get("prepared", params)
             if out is not None:
-                for provider in recache:
-                    provider(spark, sf_dir)
                 return out
             with reuse.capture() as held:
                 out = fn(spark, sf_dir)

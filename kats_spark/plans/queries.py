@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kats_spark import reuse
 from kats_spark.functions import calendar, metrics as M, rolling, stats, ta
 from kats_spark.plans.prepared import prepared
 from kats_spark.operators import decomposition, dedup, mk, resample, robust_stat
@@ -91,8 +92,9 @@ def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange ELIMINATION (canChangeCachedPlanOutputPartitioning=false
     # so windows could trust the cached layout) was A/B'd and is a net
     # LOSS — every other cached plan loses AQE coalescing; see
-    # OPTIMIZATION_r13.md.
-    return (
+    # OPTIMIZATION_r13.md.  Registered, so a prepared query holding the
+    # cache re-persists it on every memo hit (plans/prepared.py).
+    return reuse.register(
         resample.aggregate_to_grid(raw_series(spark, sf_dir), 3600, "avg")
         .repartition("series_id")
         .cache()
@@ -100,7 +102,7 @@ def hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
+    return reuse.register(
         resample.aggregate_to_grid(raw_series(spark, sf_dir), 86400, "avg")
         .repartition("series_id")
         .cache()
@@ -502,7 +504,7 @@ LEFT JOIN ties t ON p.series_id = t.series_id
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_mk_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = mk.mk_rolling(hourly_series(spark, sf_dir), window_size=24)
     return _fmt_time(_r6(out, "mk_s", "tau"))
@@ -527,7 +529,7 @@ FROM arrs
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_mk_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Significance-classified rolling MK (the detector gate, not just the
     statistic): tie-corrected variance, continuity-corrected z, two-sided
@@ -581,7 +583,7 @@ FROM zc WHERE abs(z) > {zcrit!r}
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_acf_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACFDetector seasonality presence + pruned cycle lengths
     (Bartlett CIs, greedy-equivalent divisor pruning) — full oracle."""
@@ -666,7 +668,7 @@ FROM sa
 # trend models (closed-form OLS)
 # --------------------------------------------------------------------------
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = trend.linear_forecast(hourly_series(spark, sf_dir), steps=24, freq_seconds=3600)
     return _fmt_time(_r6(out, "fcst", "fcst_lower", "fcst_upper"))
@@ -1190,7 +1192,7 @@ WINDOW
 # decomposition
 # --------------------------------------------------------------------------
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_ma_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = decomposition.ma_decompose(hourly_series(spark, sf_dir), period=24)
     return _fmt_time(_r6(out, "value", "trend", "seasonal", "residual"))
@@ -2037,7 +2039,7 @@ HAVING count(*) >= 2
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_auto_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection INSIDE one plan (the Evaluator/backtester flow,
     kats/evaluation/evaluator.py + backtesters.py, as a single query):

@@ -31,6 +31,7 @@ from kats_spark.operators import (
     trend,
     var as var_mod,
 )
+from kats_spark.operators.skew import spread
 from kats_spark.plans import bvar_oracle as _BVAR_ORACLE
 from kats_spark.plans import kernel_oracle as _KERNEL_ORACLE
 from kats_spark.plans import mcusum_oracle as _MCUSUM_ORACLE
@@ -150,7 +151,7 @@ FROM united GROUP BY 1, 2
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_weighted_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted-average ensemble (weighted_avg_ensemble.py:30), weights =
     1/backtest-MAE per (series, model) — full oracle composed from the
@@ -1864,24 +1865,21 @@ def q_ivf_stored_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and scans ONLY the probed cells' files via partition pruning —
     the amortized daily-search path a 100 TB corpus actually runs.
     Output (and oracle) identical to ivf_topk_portable: the stored
-    search replays the same rounded probe/cosine lattice."""
-    import os
-
+    search replays the same rounded probe/cosine lattice.  The reuse gate
+    keys on the source parquet's content fingerprint, so a regenerated
+    ``embeddings.parquet`` rebuilds the index."""
     from kats_spark.operators import ivf
     from kats_spark.sources import ann_store
 
-    sf_name = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        "spark-warehouse",
-        f"ivf_store_{sf_name}",
-    )
+    _, path = ann_store.stored_location("ivf_store", sf_dir)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
+    fp = ann_store.source_fingerprint(f"{sf_dir}/embeddings.parquet")
+    if not ann_store.stored_is_current(path, fp):
         indexed, centers = ivf.build_index_portable(emb, n_cells=8)
         ann_store.save_ivf_portable(indexed, centers, path)
+        ann_store.mark_stored(path, fp)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -2397,7 +2395,7 @@ FROM ranked WHERE rank <= 10
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_tsfeatures_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TsFeatures KERNEL group exactly as the wide row consumes it
     (kernel_features with skip_stl — the STL trio comes from
@@ -2420,7 +2418,7 @@ def q_tsfeatures_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_tsfeatures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full 69-column TsFeatures vector (expression + kernel + STL +
     acfpacf + seasonalities + nowcasting + time layers) — FULL oracle
@@ -2441,7 +2439,7 @@ def q_tsfeatures_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_tsfeatures_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EXPRESSION layer of the TsFeatures vector (every group except
     the numpy kernel layer), hash-matched against a full DuckDB replay —
@@ -2600,7 +2598,7 @@ JOIN hmode hm USING (series_id) JOIN ls s USING (series_id)
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_tsfeatures_detector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TsFeatures DETECTOR-DERIVED feature groups
     (kats/tsfeatures/tsfeatures.py:1444-1720): 17 features per series
@@ -2914,7 +2912,7 @@ def q_prophet_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ProphetDetectorModel on the lite backend: fit on the leading 70%
     of each series, score the scan segment against the prediction band
     (prophet_detector.py:332 semantics).  Iterative MAP -> rows-only."""
-    from kats_spark.models.external import prophet_detector_scores
+    from kats_spark.models.prophet_lite import prophet_detector_scores
 
     out = prophet_detector_scores(hourly_series(spark, sf_dir))
     return _fmt_time(_r6(out, "score", "predicted", "lower", "upper"))
@@ -3365,7 +3363,7 @@ def q_prophet_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fmt_time(_r6(out, "fcst", "fcst_lower", "fcst_upper"))
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Loess-STL per-series decomposition (decomposition.py:171
     __decompose_STL surface) — FULL oracle since r12: the deterministic
@@ -3451,7 +3449,7 @@ FROM fc f LEFT JOIN seas s ON f.series_id = s.series_id AND f.phase = s.phase
 # --------------------------------------------------------------------------
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EMA(12) per point (feature_extraction.py:375 EMA) — the recursive
     family's representative, hash-matched: pandas ewm(span, adjust=True)
@@ -3727,7 +3725,7 @@ def q_metalearn_hpt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_kats_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.models import kats_ensemble as ke
 
@@ -4045,15 +4043,12 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         k,
         "x",
     )
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select(
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
             _clean(192).alias("s192"),
             _clean(256).alias("s256"),
         )
-        .repartition(par)
     )
 
     stats_cols = ["media_id", "kind", "width", "height", "channels",
@@ -4175,10 +4170,8 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kats_spark.operators import multimodal
 
-    par = spark.sparkContext.defaultParallelism
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select(
+    docs = spread(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             F.col("doc_id").cast("bigint").alias("doc_id"),
             F.rpad(
                 F.regexp_replace(F.substring(F.col("text"), 1, 1), "[^ -~]", "."),
@@ -4186,7 +4179,6 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "x",
             ).alias("c0"),
         )
-        .repartition(par)
     )
     stats_cols = ["media_id", "kind", "width", "height", "channels",
                   "sample_rate", "n_values", "v_mean", "v_std",
@@ -4275,11 +4267,9 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         k,
         "x",
     )
-    par = spark.sparkContext.defaultParallelism
-    docs = (
+    docs = spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select(F.col("doc_id").cast("bigint").alias("doc_id"), _clean(n).alias("s64"))
-        .repartition(par)
     )
 
     cols = ["media_id", "kind", "sample_rate", "n_samples", "rms",
@@ -4541,9 +4531,9 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the full container walk + codec + sampling path.
 
     Scale shape: generation and frame sampling are back-to-back
-    ``mapInPandas`` kernels — scan -> repartition -> generate -> sample
-    is ONE narrow 32-task stage, no shuffle, and unsampled frames are
-    never decoded (the sampler seeks chunk offsets).
+    ``mapInPandas`` kernels — scan -> spread -> generate -> sample is
+    ONE narrow stage per core, no shuffle after the spread, and unsampled
+    frames are never decoded (the sampler seeks chunk offsets).
 
     Reference: no video support exists in the reference; this extends
     the multimodal family the brief requires (frame-sample)."""
@@ -4557,12 +4547,10 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         256,
         "x",
     )
-    par = spark.sparkContext.defaultParallelism
-    docs = (
+    docs = spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                 _clean.alias("s256"))
-        .repartition(par)
     )
 
     def gen_kernel(batches):
@@ -4689,7 +4677,7 @@ FROM h GROUP BY 1
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_tsfeatures_wide_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE oracled WIDE TsFeatures row (VERDICT r09 item #7): the
     closed-form-expressible feature blocks — statistics + level_shift
@@ -4744,7 +4732,7 @@ JOIN ({_Q_TSFEAT_TIME_SQL}) t USING (series_id)
 """
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_metalearn_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metalearner metadata PRODUCER (get_metadata.py workflow): the
     per-series candidate-model holdout tournament — linear / quadratic /
@@ -5459,7 +5447,7 @@ def q_simulate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@prepared(recache=(hourly_series,))
+@prepared()
 def q_kernel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kats_spark.operators import tsfeatures as tsf
 

@@ -439,6 +439,21 @@ def register_bucketed_table(
     )
 
 
+def stored_location(prefix: str, sf_dir: str) -> tuple[str, str]:
+    """``(name, path)`` of the stored index ``prefix`` built from the
+    dataset dir ``sf_dir``: the name is ``{prefix}_{basename}`` with
+    dots made underscores (a valid table identifier; stored names always
+    END in the dataset basename, the suffix cleanup matches on), the
+    path is that name under the repo's ``spark-warehouse/``.  Reuse is
+    gated on ``stored_is_current``, never on the name alone: another
+    dataset dir with the same basename shares the location."""
+    import os
+
+    name = f"{prefix}_{os.path.basename(sf_dir.rstrip('/')) or 'sf'}".replace(".", "_")
+    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
+    return name, os.path.join(root, "spark-warehouse", name)
+
+
 def source_fingerprint(src_path: str) -> str:
     """Content fingerprint of a source parquet (footer metadata only —
     no Spark job): row count + byte size + an md5 over every row

@@ -7,10 +7,10 @@ that upgrade rule mechanical: unknown keys are preserved (forward
 compat), missing keys are defaulted (backward compat), and the stored
 ``version`` survives so migrations can branch on it.
 
-In streaming this string is the per-series state value of
-``applyInPandasWithState`` / ``transformWithStateInPandas``
-(streaming/detector_harness.py uses the same convention); in batch it is
-a plain string column, so checkpoints are readable Parquet/JSON.
+In streaming this string is the per-series grouped-state value:
+streaming/detector_harness.py loads and saves every streaming detector
+model's state through that model's ``CODEC``.  In batch it is a plain
+string column, so checkpoints are readable Parquet/JSON.
 """
 
 from __future__ import annotations

@@ -1,4 +1,5 @@
-"""Streaming BocpdDetectorModel on ``applyInPandasWithState``.
+"""Streaming BocpdDetectorModel on the detector harness
+(streaming/detector_harness.py).
 
 Parity with kats/detectors/bocpd_model.py:25-193 (``BocpdDetectorModel``:
 the incremental fit_predict contract of kats/detectors/detector.py:137-207
@@ -24,17 +25,17 @@ State size is O(max_run) floats per series regardless of stream length.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Any
 
 import numpy as np
 import pandas as pd
 
 from kats_spark.operators.bocpd import _bocpd_poisson_step, _bocpd_step
 from kats_spark.sources.state import StateCodec
+from kats_spark.streaming.detector_harness import Step, score_stream
 from kats_spark.tsframe import TSSchema, DEFAULT
 
 OUTPUT_SCHEMA = "series_id string, time timestamp, value double, cp_prob double"
-STATE_SCHEMA = "state_json string"
 
 WARMUP = 20
 
@@ -108,62 +109,40 @@ def _advance(
     return None
 
 
-def make_bocpd_updater(
-    hazard_lambda: float = 250.0,
-    max_run: int = 200,
-    lag: int = 10,
-    s: TSSchema = DEFAULT,
-    likelihood: str = "normal",
-):
+def _step(hazard_lambda: float, max_run: int, lag: int, likelihood: str) -> Step:
     """``likelihood="poisson"`` switches to the Gamma-conjugate count
     model (fixed priors α=1, β=0.05 — bocpd.py:244 — so the recursion
     starts on the first point, no warmup buffer)."""
     h = 1.0 / hazard_lambda
     lag = min(lag, max_run)
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (sid,) = key
-        st: dict[str, Any] = CODEC.loads(state.get[0]) if state.exists else CODEC.new()
-        out: list[tuple] = []
-
-        def consume(t_iso: str, v: float) -> None:
-            row = _advance(st, t_iso, v, h, lag)
+    def step(st: dict[str, Any], t, v: float) -> list[tuple]:
+        t_iso = pd.Timestamp(t).isoformat()
+        if st["r"] is None and likelihood == "poisson":
+            r0 = np.zeros(max_run + 1); r0[0] = 1.0
+            st.update(
+                likelihood="poisson", alpha0=1.0, beta0=0.05,
+                r=r0.tolist(),
+                alpha=np.full(max_run + 1, 1.0).tolist(),
+                beta=np.full(max_run + 1, 0.05).tolist(),
+            )
+            points = [(t_iso, v)]
+        elif st["r"] is None:
+            st["init_buf"] = st["init_buf"] + [(t_iso, v)]
+            if len(st["init_buf"]) < WARMUP:
+                return []
+            st.update(_init_priors([x for _, x in st["init_buf"]], max_run))
+            points, st["init_buf"] = st["init_buf"], []
+        else:
+            points = [(t_iso, v)]
+        rows = []
+        for pt, pv in points:
+            row = _advance(st, pt, pv, h, lag)
             if row is not None:
-                out.append((sid, pd.Timestamp(row[0]), row[1], row[2]))
+                rows.append((pd.Timestamp(row[0]), row[1], row[2]))
+        return rows
 
-        for pdf in pdfs:
-            pdf = pdf.sort_values(s.time)
-            for t, v in zip(pdf[s.time], pdf[s.value]):
-                t_iso = pd.Timestamp(t).isoformat()
-                if st["r"] is None and likelihood == "poisson":
-                    r0 = np.zeros(max_run + 1); r0[0] = 1.0
-                    st.update(
-                        likelihood="poisson", alpha0=1.0, beta0=0.05,
-                        r=r0.tolist(),
-                        alpha=np.full(max_run + 1, 1.0).tolist(),
-                        beta=np.full(max_run + 1, 0.05).tolist(),
-                    )
-                    consume(t_iso, float(v))
-                elif st["r"] is None:
-                    st["init_buf"] = st["init_buf"] + [(t_iso, float(v))]
-                    if len(st["init_buf"]) == WARMUP:
-                        st.update(
-                            _init_priors(
-                                [x for _, x in st["init_buf"]], max_run
-                            )
-                        )
-                        for bt, bv in st["init_buf"]:
-                            consume(bt, bv)
-                        st["init_buf"] = []
-                else:
-                    consume(t_iso, float(v))
-
-        state.update((CODEC.dumps(st),))
-        yield pd.DataFrame(
-            out, columns=[s.series_id, s.time, s.value, "cp_prob"]
-        )
-
-    return update
+    return step
 
 
 def bocpd_stream(
@@ -174,11 +153,7 @@ def bocpd_stream(
     s: TSSchema = DEFAULT,
     likelihood: str = "normal",
 ):
-    """Structured Streaming scorer: groupBy(series).applyInPandasWithState."""
-    return stream_df.groupBy(s.series_id).applyInPandasWithState(
-        make_bocpd_updater(hazard_lambda, max_run, lag, s, likelihood),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    """Structured Streaming scorer on the detector harness."""
+    return score_stream(
+        stream_df, _step(hazard_lambda, max_run, lag, likelihood), CODEC, OUTPUT_SCHEMA, s
     )

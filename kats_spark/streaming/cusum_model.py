@@ -1,4 +1,5 @@
-"""Streaming CUSUMDetectorModel on ``applyInPandasWithState``.
+"""Streaming CUSUMDetectorModel on the detector harness
+(streaming/detector_harness.py).
 
 Parity with kats/detectors/cusum_model.py:150-680 (``CUSUMDetectorModel``,
 fit_predict :594, window algebra :603-612): maintain a reference regime
@@ -7,7 +8,8 @@ CUSUM; crossing the decision interval emits a changepoint, resets the
 statistic, and restarts the reference regime — the incremental analog of
 the reference's historical_window/scan_window/step_window loop.
 
-State (versioned JSON, vN+1-loads-vN like kats/detectors/detector.py:157):
+State (``CODEC``, versioned JSON, vN+1-loads-vN like
+kats/detectors/detector.py:157):
 - Welford (n, mean, m2) of the CURRENT regime = ``historical_data``
 - s_pos / s_neg        = tabular CUSUM statistics
 - changepoints         = [(epoch_seconds, direction)] with the reference's
@@ -22,17 +24,16 @@ from the regime mean.
 
 from __future__ import annotations
 
-import json
-from typing import Any, Iterable, Iterator
+from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kats_spark.sources.state import StateCodec
+from kats_spark.streaming.detector_harness import Step, score_batch, score_stream
 from kats_spark.tsframe import TSSchema, DEFAULT
 
-STATE_VERSION = 1
 RETENTION_SEC = 604800  # 7 days, cusum_model.py:59
 MAX_CHANGEPOINTS = 10  # cusum_model.py:61
 
@@ -40,31 +41,11 @@ OUTPUT_SCHEMA = (
     "series_id string, time timestamp, value double, score double, "
     "predicted double, lower double, upper double, stat_sig int, cp_flag int"
 )
-STATE_SCHEMA = "state_json string"
 
-
-def _new_state() -> dict[str, Any]:
-    return {
-        "version": STATE_VERSION,
-        "n": 0,
-        "mean": 0.0,
-        "m2": 0.0,
-        "s_pos": 0.0,
-        "s_neg": 0.0,
-        "changepoints": [],
-    }
-
-
-def serialize_state(state: dict[str, Any]) -> str:
-    return json.dumps(state, sort_keys=True)
-
-
-def deserialize_state(raw: str | None) -> dict[str, Any]:
-    if not raw:
-        return _new_state()
-    base = _new_state()
-    base.update(json.loads(raw))
-    return base
+CODEC = StateCodec(
+    1,
+    {"n": 0, "mean": 0.0, "m2": 0.0, "s_pos": 0.0, "s_neg": 0.0, "changepoints": []},
+)
 
 
 def _update_one(
@@ -117,28 +98,13 @@ def _update_one(
     }
 
 
-def make_cusum_updater(
-    k: float = 0.5, h: float = 5.0, min_history: int = 10, s: TSSchema = DEFAULT
-):
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = deserialize_state(state.get[0] if state.exists else None)
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(s.time)
-            for _, row in pdf.iterrows():
-                ts = pd.Timestamp(row[s.time])
-                res = _update_one(
-                    st, float(row[s.value]), ts.timestamp(), k, h, min_history
-                )
-                rows.append(
-                    {s.series_id: key[0], s.time: row[s.time], s.value: row[s.value], **res}
-                )
-        state.update((serialize_state(st),))
-        yield pd.DataFrame(rows)
+def _step(k: float, h: float, min_history: int) -> Step:
+    def step(st: dict[str, Any], t, v: float) -> list[tuple]:
+        res = _update_one(st, v, pd.Timestamp(t).timestamp(), k, h, min_history)
+        # _update_one's keys are in OUTPUT_SCHEMA order
+        return [(t, v, *res.values())]
 
-    return update
+    return step
 
 
 def cusum_stream(
@@ -148,13 +114,7 @@ def cusum_stream(
     min_history: int = 10,
     s: TSSchema = DEFAULT,
 ) -> DataFrame:
-    return stream_df.groupBy(s.series_id).applyInPandasWithState(
-        make_cusum_updater(k, h, min_history, s),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return score_stream(stream_df, _step(k, h, min_history), CODEC, OUTPUT_SCHEMA, s)
 
 
 def cusum_batch(
@@ -166,16 +126,4 @@ def cusum_batch(
 ) -> DataFrame:
     """Batch reference with the identical update rule (streaming==batch
     parity target)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _new_state()
-        rows = []
-        for _, row in pdf.sort_values(s.time).iterrows():
-            ts = pd.Timestamp(row[s.time])
-            res = _update_one(st, float(row[s.value]), ts.timestamp(), k, h, min_history)
-            rows.append(
-                {s.series_id: row[s.series_id], s.time: row[s.time], s.value: row[s.value], **res}
-            )
-        return pd.DataFrame(rows)
-
-    return df.groupBy(s.series_id).applyInPandas(fn, OUTPUT_SCHEMA)
+    return score_batch(df, _step(k, h, min_history), CODEC, OUTPUT_SCHEMA, s)

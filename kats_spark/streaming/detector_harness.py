@@ -7,18 +7,24 @@ AnomalyResponse``.  The serialized-state + incremental-update contract maps
 1:1 onto Spark Structured Streaming grouped state:
 
 - state               = the detector's ``serialize()`` bytes (versioned
-                        JSON, mirroring the vN+1-must-load-vN requirement,
+                        JSON through the model's ``sources/state.StateCodec``,
+                        mirroring the vN+1-must-load-vN requirement,
                         kats/detectors/detector.py:157-163)
 - ``historical_data`` = whatever the state decodes to
 - ``fit_predict``     = one micro-batch update per series
 
-Output is the AnomalyResponse row shape (kats/detectors/detector_consts.py:563):
-(series_id, time, value, score, predicted, lower, upper, stat_sig).
+This module is the one place that turns a per-point step function
+``step(state, time, value) -> rows`` into a streaming scorer
+(``score_stream``) and its batch twin (``score_batch``).  A step mutates
+the decoded state dict and returns zero or more ``(time, value, *scores)``
+rows; the harness prepends the series id.  The z-score, CUSUM, StatSig,
+RollingStats and BOCPD models all run on it.
 
 Included detector: streaming z-score (RollingStatsModel z_score semantics,
 kats/detectors/rolling_stats_model.py:58-90) with Welford mean/variance
-state — numerically stable, O(1) per point, mergeable.  The same harness
-shape hosts CUSUM/StatSig states later.
+state — numerically stable, O(1) per point, mergeable.  Output is the
+AnomalyResponse row shape (kats/detectors/detector_consts.py:563):
+(series_id, time, value, score, predicted, lower, upper, stat_sig).
 
 Batch parity helper ``zscore_batch`` applies the identical update rule to
 a static frame so streaming output can be asserted equal to batch output.
@@ -26,42 +32,85 @@ a static frame so streaming output can be asserted equal to batch output.
 
 from __future__ import annotations
 
-import json
-from typing import Any, Iterable, Iterator
+from typing import Any, Callable, Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kats_spark.sources.state import StateCodec
 from kats_spark.tsframe import TSSchema, DEFAULT
 
-STATE_VERSION = 1
+Step = Callable[[dict, Any, float], Iterable[tuple]]
+
+STATE_SCHEMA = "state_json string"
 
 OUTPUT_SCHEMA = (
     "series_id string, time timestamp, value double, score double, "
     "predicted double, lower double, upper double, stat_sig int"
 )
-STATE_SCHEMA = "state_json string"
+
+CODEC = StateCodec(1, {"n": 0, "mean": 0.0, "m2": 0.0})
 
 
-def _new_state() -> dict[str, Any]:
-    return {"version": STATE_VERSION, "n": 0, "mean": 0.0, "m2": 0.0}
+def fold(
+    key: tuple,
+    pdfs: Iterable[pd.DataFrame],
+    st: dict[str, Any],
+    step: Step,
+    schema: str,
+    s: TSSchema = DEFAULT,
+) -> pd.DataFrame:
+    """Feed one series' rows through ``step`` in time order (each chunk
+    sorted on its own, as it arrives) and collect the emitted rows."""
+    rows = []
+    for pdf in pdfs:
+        pdf = pdf.sort_values(s.time)
+        for t, v in zip(pdf[s.time], pdf[s.value]):
+            rows.extend((key[0], *r) for r in step(st, t, float(v)))
+    return pd.DataFrame(rows, columns=[f.split()[0] for f in schema.split(",")])
 
 
-def serialize_state(state: dict[str, Any]) -> str:
-    """``DetectorModel.serialize`` (kats/detectors/detector.py:166)."""
-    return json.dumps(state, sort_keys=True)
+def score_stream(
+    stream_df: DataFrame,
+    step: Step,
+    codec: StateCodec,
+    schema: str,
+    s: TSSchema = DEFAULT,
+) -> DataFrame:
+    """groupBy(series).applyInPandasWithState: load the series' state,
+    fold the micro-batch, save the state back."""
+
+    def update(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = codec.loads(state.get[0] if state.exists else None)
+        out = fold(key, pdfs, st, step, schema, s)
+        state.update((codec.dumps(st),))
+        yield out
+
+    return stream_df.groupBy(s.series_id).applyInPandasWithState(
+        update,
+        outputStructType=schema,
+        stateStructType=STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
-def deserialize_state(raw: str | None) -> dict[str, Any]:
-    """vN+1 loads vN: unknown keys are preserved, missing keys defaulted."""
-    if not raw:
-        return _new_state()
-    loaded = json.loads(raw)
-    base = _new_state()
-    base.update(loaded)
-    return base
+def score_batch(
+    df: DataFrame,
+    step: Step,
+    codec: StateCodec,
+    schema: str,
+    s: TSSchema = DEFAULT,
+) -> DataFrame:
+    """Batch twin: the same fold over each whole series from a fresh
+    state (one applyInPandas per series)."""
+    return df.groupBy(s.series_id).applyInPandas(
+        lambda key, pdf: fold(key, [pdf], codec.new(), step, schema, s), schema
+    )
 
 
 def _update_one(state: dict[str, Any], value: float, z_threshold: float) -> dict[str, Any]:
@@ -89,47 +138,25 @@ def _update_one(state: dict[str, Any], value: float, z_threshold: float) -> dict
     }
 
 
-def make_zscore_updater(
-    z_threshold: float = 3.0,
-    s: TSSchema = DEFAULT,
-    late_tolerance_seconds: float | None = None,
-):
-    """Returns the applyInPandasWithState update function.
-
-    ``late_tolerance_seconds`` enforces the late-data policy INSIDE the
+def _zscore_step(z_threshold: float, late_tolerance_seconds: float | None = None) -> Step:
+    """``late_tolerance_seconds`` enforces the late-data policy INSIDE the
     stateful operator: Spark's watermark drives state timeouts but does
-    NOT auto-drop late rows for arbitrary stateful ops, so the updater
+    NOT auto-drop late rows for arbitrary stateful ops, so the step
     tracks the max event time seen and skips rows older than
     ``max_seen - tolerance`` — the streaming-native replacement for the
     reference's DataIrregularGranularityError (kats/consts.py:64-67)."""
 
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        st = deserialize_state(state.get[0] if state.exists else None)
-        out_rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(s.time)
-            for _, row in pdf.iterrows():
-                ts = pd.Timestamp(row[s.time]).value / 1e9
-                if late_tolerance_seconds is not None:
-                    max_seen = st.get("max_ts")
-                    if max_seen is not None and ts < max_seen - late_tolerance_seconds:
-                        continue  # late beyond the bound: drop, don't score
-                    st["max_ts"] = max(max_seen or ts, ts)
-                res = _update_one(st, float(row[s.value]), z_threshold)
-                out_rows.append(
-                    {
-                        s.series_id: key[0],
-                        s.time: row[s.time],
-                        s.value: row[s.value],
-                        **res,
-                    }
-                )
-        state.update((serialize_state(st),))
-        yield pd.DataFrame(out_rows)
+    def step(st: dict[str, Any], t, v: float) -> list[tuple]:
+        if late_tolerance_seconds is not None:
+            ts = pd.Timestamp(t).value / 1e9
+            max_seen = st.get("max_ts")
+            if max_seen is not None and ts < max_seen - late_tolerance_seconds:
+                return []  # late beyond the bound: drop, don't score
+            st["max_ts"] = max(max_seen or ts, ts)
+        # _update_one's keys are in OUTPUT_SCHEMA order
+        return [(t, v, *_update_one(st, v, z_threshold).values())]
 
-    return update
+    return step
 
 
 def zscore_stream(
@@ -150,26 +177,12 @@ def zscore_stream(
     if late_policy_watermark is not None:
         stream_df = stream_df.withWatermark(s.time, late_policy_watermark)
         tol = pd.Timedelta(late_policy_watermark).total_seconds()
-    return stream_df.groupBy(s.series_id).applyInPandasWithState(
-        make_zscore_updater(z_threshold, s, late_tolerance_seconds=tol),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return score_stream(
+        stream_df, _zscore_step(z_threshold, tol), CODEC, OUTPUT_SCHEMA, s
     )
 
 
 def zscore_batch(df: DataFrame, z_threshold: float = 3.0, s: TSSchema = DEFAULT) -> DataFrame:
-    """Batch reference: same update rule over a static frame (one
-    applyInPandas per series) — used to assert streaming==batch parity."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _new_state()
-        rows = []
-        for _, row in pdf.sort_values(s.time).iterrows():
-            res = _update_one(st, float(row[s.value]), z_threshold)
-            rows.append({s.series_id: row[s.series_id], s.time: row[s.time],
-                         s.value: row[s.value], **res})
-        return pd.DataFrame(rows)
-
-    return df.groupBy(s.series_id).applyInPandas(fn, OUTPUT_SCHEMA)
+    """Batch reference: same update rule over a static frame — used to
+    assert streaming==batch parity."""
+    return score_batch(df, _zscore_step(z_threshold), CODEC, OUTPUT_SCHEMA, s)

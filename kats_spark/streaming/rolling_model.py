@@ -1,4 +1,5 @@
-"""Streaming RollingStatsModel on ``applyInPandasWithState``.
+"""Streaming RollingStatsModel on the detector harness
+(streaming/detector_harness.py).
 
 Parity with kats/detectors/rolling_stats_model.py:188-498
 (``RollingStatsModel``): each arriving point scores against its own
@@ -16,19 +17,18 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Any
 
 import numpy as np
-import pandas as pd
 
 from kats_spark.sources.state import StateCodec
+from kats_spark.streaming.detector_harness import Step, score_stream
 from kats_spark.tsframe import TSSchema, DEFAULT
 
 OUTPUT_SCHEMA = (
     "series_id string, time timestamp, value double, "
     "z_score double, iqr_score double, mad_score double"
 )
-STATE_SCHEMA = "state_json string"
 
 CODEC = StateCodec(1, {"buf": []})
 
@@ -55,37 +55,18 @@ def _scores(buf: list[float], value: float) -> tuple:
     return z, iqr, mad
 
 
-def make_rolling_updater(n: int, s: TSSchema = DEFAULT):
-    def update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (sid,) = key
-        st: dict[str, Any] = CODEC.loads(state.get[0]) if state.exists else CODEC.new()
-        buf = list(st["buf"])
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(s.time)
-            for t, v in zip(pdf[s.time], pdf[s.value]):
-                z, iqr, mad = _scores(buf, float(v))
-                out.append((sid, t, float(v), z, iqr, mad))
-                buf = (buf + [float(v)])[-n:]
-        st["buf"] = buf
-        state.update((CODEC.dumps(st),))
-        yield pd.DataFrame(
-            out,
-            columns=[s.series_id, s.time, s.value, "z_score", "iqr_score", "mad_score"],
-        )
+def _step(n: int) -> Step:
+    def step(st: dict[str, Any], t, v: float) -> list[tuple]:
+        row = (t, v, *_scores(st["buf"], v))
+        st["buf"] = (st["buf"] + [v])[-n:]
+        return [row]
 
-    return update
+    return step
 
 
 def rolling_stream(stream_df, n: int, s: TSSchema = DEFAULT):
     """Structured Streaming rolling-stats scorer."""
-    return stream_df.groupBy(s.series_id).applyInPandasWithState(
-        make_rolling_updater(n, s),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    return score_stream(stream_df, _step(n), CODEC, OUTPUT_SCHEMA, s)
 
 
 def rolling_batch(df, n: int, s: TSSchema = DEFAULT):

@@ -1,4 +1,5 @@
-"""Streaming StatSigDetectorModel on ``applyInPandasWithState``.
+"""Streaming StatSigDetectorModel on the detector harness
+(streaming/detector_harness.py).
 
 Parity with kats/detectors/stat_sig_detector.py:44-933
 (``StatSigDetectorModel``): per point, the t-score of the test window
@@ -21,18 +22,16 @@ numbers.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
-import pandas as pd
+from typing import Any
 
 from kats_spark.sources.state import StateCodec
+from kats_spark.streaming.detector_harness import Step, score_stream
 from kats_spark.tsframe import TSSchema, DEFAULT
 
 OUTPUT_SCHEMA = (
     "series_id string, time timestamp, value double, mean_test double, "
     "mean_control double, stat_sig_score double"
 )
-STATE_SCHEMA = "state_json string"
 
 CODEC = StateCodec(1, {"buf": []})
 
@@ -67,32 +66,12 @@ def _score_one(buf: list[float], value: float, n_control: int, n_test: int):
     return mean_t, mean_c, score, buf
 
 
-def make_statsig_updater(n_control: int, n_test: int, s: TSSchema = DEFAULT):
-    def update(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (sid,) = key
-        st: dict[str, Any] = (
-            CODEC.loads(state.get[0]) if state.exists else CODEC.new()
-        )
-        buf = list(st["buf"])
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(s.time)
-            for t, v in zip(pdf[s.time], pdf[s.value]):
-                mean_t, mean_c, score, buf = _score_one(
-                    buf, float(v), n_control, n_test
-                )
-                out.append((sid, t, float(v), mean_t, mean_c, score))
-        st["buf"] = buf
-        state.update((CODEC.dumps(st),))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                s.series_id, s.time, s.value,
-                "mean_test", "mean_control", "stat_sig_score",
-            ],
-        )
+def _step(n_control: int, n_test: int) -> Step:
+    def step(st: dict[str, Any], t, v: float) -> list[tuple]:
+        mean_t, mean_c, score, st["buf"] = _score_one(st["buf"], v, n_control, n_test)
+        return [(t, v, mean_t, mean_c, score)]
 
-    return update
+    return step
 
 
 def statsig_stream(
@@ -101,11 +80,5 @@ def statsig_stream(
     n_test: int,
     s: TSSchema = DEFAULT,
 ):
-    """Structured Streaming scorer: groupBy(series).applyInPandasWithState."""
-    return stream_df.groupBy(s.series_id).applyInPandasWithState(
-        make_statsig_updater(n_control, n_test, s),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
+    """Structured Streaming scorer on the detector harness."""
+    return score_stream(stream_df, _step(n_control, n_test), CODEC, OUTPUT_SCHEMA, s)

@@ -11,11 +11,11 @@ from kats_spark.streaming import cusum_model as cm
 
 
 def test_cusum_stream_state_roundtrip():
-    st = cm._new_state()
+    st = cm.CODEC.new()
     cm._update_one(st, 5.0, 1000.0, 0.5, 5.0, 1)
-    raw = cm.serialize_state(st)
-    assert cm.deserialize_state(raw) == st
-    legacy = cm.deserialize_state('{"version": 0, "n": 3, "mean": 1.0, "m2": 0.5}')
+    raw = cm.CODEC.dumps(st)
+    assert cm.CODEC.loads(raw) == st
+    legacy = cm.CODEC.loads('{"version": 0, "n": 3, "mean": 1.0, "m2": 0.5}')
     assert legacy["s_pos"] == 0.0 and legacy["n"] == 3
 
 
@@ -36,7 +36,7 @@ def test_cusum_batch_detects_shift_and_retention(spark):
 
 
 def test_cusum_changepoint_cap():
-    st = cm._new_state()
+    st = cm.CODEC.new()
     # 15 forced changepoints: cap at 10, retention keeps recent only
     t = 0.0
     for i in range(15):
@@ -207,25 +207,6 @@ def test_harmonic_regression_recovers_sine(spark):
     )
     expected = 5 + 3 * np.sin(2 * np.pi * (n + np.arange(24)) / 24 + 0.7)
     np.testing.assert_allclose(out.fcst.values, expected, atol=0.15)
-
-
-def test_external_models_gate_cleanly(spark):
-    from kats_spark.models import external
-
-    df = simulator.simulate(spark, n_series=1, n_points=50, noise_std=1.0, seed=161)
-    import pytest
-
-    with pytest.raises(external.BackendMissing, match="prophet"):
-        external.prophet_forecast(df, steps=5, freq_seconds=3600, fallback="raise")
-    # default now routes to the numpy ProphetLite implementation
-    lite = external.prophet_forecast(df, steps=5, freq_seconds=3600).toPandas()
-    assert len(lite) == 5 and lite.fcst.notna().all()
-    with pytest.raises(external.BackendMissing, match="torch"):
-        external.lstm_forecast(df, steps=5, freq_seconds=3600)
-    with pytest.raises(external.BackendMissing, match="prophet"):
-        external.prophet_detector_scores(df, fallback="raise")
-    lite_scores = external.prophet_detector_scores(df).toPandas()
-    assert len(lite_scores) > 0 and lite_scores.score.notna().all()
 
 
 def test_rename_columns_by_prefix(spark):

@@ -392,7 +392,7 @@ def test_prophet_detector_flags_injected_anomaly(spark):
     import numpy as np
     import pandas as pd
 
-    from kats_spark.models.external import prophet_detector_scores
+    from kats_spark.models.prophet_lite import prophet_detector_scores
 
     rng = np.random.default_rng(42)
     n = 480  # 20 days hourly; scan = trailing 30%
@@ -453,7 +453,7 @@ def test_prophet_detector_remove_outliers_cleans_history(spark):
     import numpy as np
     import pandas as pd
 
-    from kats_spark.models.external import prophet_detector_scores
+    from kats_spark.models.prophet_lite import prophet_detector_scores
 
     rng = np.random.default_rng(7)
     n = 480
@@ -492,7 +492,7 @@ def test_prophet_detector_holiday_multiplier(spark):
     import numpy as np
     import pandas as pd
 
-    from kats_spark.models.external import prophet_detector_scores
+    from kats_spark.models.prophet_lite import prophet_detector_scores
 
     rng = np.random.default_rng(5)
     n = 480

@@ -63,29 +63,43 @@ def test_bound_evicts_least_recently_used_and_releases(spark, monkeypatch):
 
 
 def test_hit_re_registers_stage_set_and_ivfpq_persists(spark, sf_dir):
-    """After an external clearCache, a hit of the corpus stage set and
-    of the ivfpq coarse entry re-registers every persist they hold."""
-    from kats_spark.plans import pipeline_queries, queries2
+    """After an external clearCache, a hit of the corpus stage set, of
+    the ivfpq coarse entry and of a prepared query on hourly_series
+    re-registers every persist they hold."""
+    from kats_spark.operators import resample
+    from kats_spark.plans import pipeline_queries, queries, queries2
 
     reuse.drop("corpus_stages")
     reuse.drop("ivfpq_coarse")
     pipeline_queries._corpus_stages(spark, sf_dir)
     queries2.q_ivfpq_recall(spark, sf_dir)
+    queries.q_mk_rolling(spark, sf_dir)
     stage_frames, coarse_frames = _held("corpus_stages"), _held("ivfpq_coarse")
     # scored + exact + the two AllPairs frames; indexed + centers
     assert len(stage_frames) == 4 and len(coarse_frames) == 2
     assert all(_cached(f) for f in stage_frames + coarse_frames)
+    # never cached itself: equal to the hourly cache's plan, so its
+    # storageLevel is whatever the cache manager holds for that plan
+    hourly = resample.aggregate_to_grid(
+        queries.raw_series(spark, sf_dir), 3600, "avg"
+    ).repartition("series_id")
+    assert _cached(hourly)
 
     spark.catalog.clearCache()
     assert not any(_cached(f) for f in stage_frames + coarse_frames)
+    assert not _cached(hourly)
     hits = reuse.stats("corpus_stages").hits, reuse.stats("ivfpq_coarse").hits
+    prepared_hits = reuse.stats("prepared").hits
     pipeline_queries._corpus_stages(spark, sf_dir)
     queries2.q_ivfpq_recall(spark, sf_dir)
+    queries.q_mk_rolling(spark, sf_dir)
     assert (reuse.stats("corpus_stages").hits, reuse.stats("ivfpq_coarse").hits) == (
         hits[0] + 1,
         hits[1] + 1,
     )
     assert all(_cached(f) for f in stage_frames + coarse_frames)
+    assert reuse.stats("prepared").hits == prepared_hits + 1
+    assert _cached(hourly)
 
 
 def test_no_parallel_memos_outside_reuse():

@@ -582,3 +582,47 @@ def test_register_bucketed_table_matches_rebuild_and_one_file_per_bucket(spark, 
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(f"DROP TABLE IF EXISTS {table2}")
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_ivf_stored_topk_rebuilds_after_source_rewrite(spark, sf_dir):
+    """The stored IVF index is gated on the source's content fingerprint:
+    after ``embeddings.parquet`` is rewritten with different vectors, the
+    stored search must equal the in-memory portable search on the NEW
+    data, not serve the index built from the old file."""
+    import os
+    import shutil
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kats_spark.plans import queries2 as q2
+    from kats_spark.sources.ann_store import stored_location
+
+    def ranked(df):
+        return df.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+
+    data = tempfile.mkdtemp()
+    _, store = stored_location("ivf_store", data)
+    src = os.path.join(data, "embeddings.parquet")
+    try:
+        table = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+        pq.write_table(table, src)
+        first = ranked(q2.q_ivf_stored_topk(spark, data))  # builds the index
+        field = table.schema.field("embedding")
+        fresh = np.random.RandomState(11).randn(table.num_rows, len(table["embedding"][0]))
+        pq.write_table(
+            table.set_column(
+                table.schema.get_field_index("embedding"),
+                field,
+                pa.array(list(fresh.astype(np.float32)), type=field.type),
+            ),
+            src,
+        )
+        got = ranked(q2.q_ivf_stored_topk(spark, data))
+        exp = ranked(q2.q_ivf_portable(spark, data))
+        assert not exp.equals(first)  # the rewrite changes the answer
+        pd.testing.assert_frame_equal(got, exp)
+    finally:
+        shutil.rmtree(data, ignore_errors=True)
+        shutil.rmtree(store, ignore_errors=True)

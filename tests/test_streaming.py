@@ -12,13 +12,13 @@ from kats_spark.streaming import detector_harness as dh
 
 
 def test_state_roundtrip_and_version_tolerance():
-    st = dh._new_state()
+    st = dh.CODEC.new()
     dh._update_one(st, 5.0, 3.0)
-    raw = dh.serialize_state(st)
-    back = dh.deserialize_state(raw)
+    raw = dh.CODEC.dumps(st)
+    back = dh.CODEC.loads(raw)
     assert back == st
     # vN+1 loads vN: extra key preserved, missing key defaulted
-    legacy = dh.deserialize_state('{"version": 0, "n": 3, "mean": 1.0}')
+    legacy = dh.CODEC.loads('{"version": 0, "n": 3, "mean": 1.0}')
     assert legacy["m2"] == 0.0 and legacy["n"] == 3
 
 
@@ -1548,3 +1548,93 @@ def test_dsir_streaming_sink_end_to_end(spark):
         assert 0 < len(kept) < len(exp)
     finally:
         shutil.rmtree(tmpdir, ignore_errors=True)
+
+
+# Final state JSON after folding _compat_chunks through each model's
+# updater at the commit before the harness refactor: checkpoints written
+# by that code must keep resuming byte-for-byte.
+_COMPAT_STATES = {
+    "zscore": '{"m2": 626.6250000000001, "max_ts": 1704150000.0, "mean": 7.875000000000001, "n": 24, "version": 1}',
+    "cusum": '{"changepoints": [[1704124800.0, "increase"]], "m2": 78.0, "mean": 13.500000000000002, "n": 8, "s_neg": 0.0, "s_pos": 0.33141099321053946, "version": 1}',
+    "statsig": '{"buf": [14.0, 10.0, 17.0, 13.0, 9.0, 16.0], "version": 1}',
+    "rolling": '{"buf": [10.0, 17.0, 13.0, 9.0, 16.0], "version": 1}',
+    "bocpd": '{"alpha": [1.0, 1.5, 2.0, 2.5], "alpha0": null, "beta": [21.110000000000003, 50.8125, 51.61333333333334, 54.91375000000001], "beta0": 21.110000000000003, "init_buf": [], "kappa": [1.0, 2.0, 3.0, 4.0], "likelihood": "normal", "mu": [5.1, 10.55, 10.033333333333333, 10.775], "mu0": 5.1, "pending": [["2024-01-01T22:00:00", 9.0], ["2024-01-01T23:00:00", 16.0]], "r": [0.019999999999999997, 0.006679453385405247, 0.005224820078710087, 0.9680957265358846], "t": 24, "version": 1}',
+    "bocpd_poisson": '{"alpha": [1.0, 17.0, 26.0, 39.0], "alpha0": 1.0, "beta": [0.05, 1.05, 2.05, 3.05], "beta0": 0.05, "init_buf": [], "kappa": null, "likelihood": "poisson", "mu": null, "mu0": null, "pending": [["2024-01-01T22:00:00", 9.0], ["2024-01-01T23:00:00", 16.0]], "r": [0.02, 0.006493411834347982, 0.0037778841297981436, 0.969728704035854], "t": 24, "version": 1}',
+}
+
+
+def _compat_chunks(late: bool = False):
+    """24 hourly points with a +9 level shift at t=16, in two micro-batches;
+    ``late`` appends a row 5 h behind the first batch's max to the second."""
+    pdf = pd.DataFrame(
+        {
+            "series_id": "a",
+            "time": pd.date_range("2024-01-01", periods=24, freq="h"),
+            "value": [float((i * 7) % 11) + (9.0 if i >= 16 else 0.0) for i in range(24)],
+        }
+    )
+    second = pdf.iloc[12:]
+    if late:
+        second = pd.concat([second, pd.DataFrame(
+            {"series_id": ["a"], "time": [pdf.time.iloc[11] - pd.Timedelta(hours=5)],
+             "value": [99.0]}
+        )])
+    return [pdf.iloc[:12], second]
+
+
+@pytest.mark.parametrize("model", sorted(_COMPAT_STATES))
+def test_harness_state_json_matches_pre_harness_updaters(model):
+    from kats_spark.streaming import bocpd_model as bm
+    from kats_spark.streaming import cusum_model as cm
+    from kats_spark.streaming import rolling_model as rm
+    from kats_spark.streaming import statsig_model as sm
+
+    mod, step = {
+        "zscore": (dh, dh._zscore_step(3.0, late_tolerance_seconds=7200.0)),
+        "cusum": (cm, cm._step(k=0.5, h=2.0, min_history=3)),
+        "statsig": (sm, sm._step(n_control=4, n_test=2)),
+        "rolling": (rm, rm._step(n=5)),
+        "bocpd": (bm, bm._step(50.0, max_run=3, lag=2, likelihood="normal")),
+        "bocpd_poisson": (bm, bm._step(50.0, max_run=3, lag=2, likelihood="poisson")),
+    }[model]
+    raw = None
+    for chunk in _compat_chunks(late=model == "zscore"):
+        # one micro-batch, exactly as score_stream's updater runs it
+        st = mod.CODEC.loads(raw)
+        dh.fold(("a",), [chunk], st, step, mod.OUTPUT_SCHEMA)
+        raw = mod.CODEC.dumps(st)
+    assert raw == _COMPAT_STATES[model]
+
+
+def test_grouped_state_lives_in_the_harness():
+    """Per-series stateful scoring goes through detector_harness.py: no other
+    module calls applyInPandasWithState (neardup/sampling key their state by
+    band/bucket and budget, not by series), and state JSON goes through
+    sources/state.StateCodec, so no streaming module but neardup imports json."""
+    import ast
+
+    import kats_spark
+
+    root = os.path.dirname(kats_spark.__file__)
+    stateful_ok = {"detector_harness.py", "neardup.py", "sampling.py"}
+    bad = []
+    for d, _, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(d, name)
+            rel = os.path.relpath(path, root)
+            src = open(path).read()
+            in_streaming = os.path.dirname(rel) == "streaming"
+            if "applyInPandasWithState" in src and not (in_streaming and name in stateful_ok):
+                bad.append(f"{rel} mentions applyInPandasWithState")
+            if in_streaming and name != "neardup.py":
+                for node in ast.walk(ast.parse(src, rel)):
+                    mods = (
+                        [a.name for a in node.names] if isinstance(node, ast.Import)
+                        else [node.module] if isinstance(node, ast.ImportFrom)
+                        else []
+                    )
+                    if any(m and m.split(".")[0] == "json" for m in mods):
+                        bad.append(f"{rel}:{node.lineno} imports json")
+    assert not bad, "; ".join(bad)
